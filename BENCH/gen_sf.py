@@ -52,8 +52,11 @@ def main() -> None:
         if len(sys.argv) > 2
         else f"/root/testdata_local/sf{sys.argv[1]}"
     )
-    assert not os.path.abspath(outdir).startswith(
+    protected = os.path.normpath(
         "/root/testdata/"
+    )
+    assert not (
+        os.path.commonpath([os.path.abspath(outdir), protected]) == protected
     ), "refusing to write into the driver's read-only testdata"
     os.makedirs(outdir, exist_ok=True)
     rng = np.random.default_rng(42)

@@ -159,11 +159,6 @@ def main() -> None:
     # a long-running cluster executor never sees; the warmed second run is
     # the number that models one.  Counters are asserted identical.
     repeats = 2 if os.environ.get("SCALING_REPEAT", "0") == "1" else 1
-    # SCALING_PREFILTER=on|off forces the verify-stage MinHash pre-filter
-    # both ways at the same scale for the crossover measurement
-    # (BENCH/BASELINE.md §7b); unset = the DedupConfig auto policy.
-    pf = os.environ.get("SCALING_PREFILTER")
-    cfg_kw = {} if pf is None else {"use_minhash_prefilter": pf == "on"}
     walls, stage_logs = [], []
     pipe = None
     for r in range(repeats):
@@ -174,7 +169,7 @@ def main() -> None:
             t.count()
         t0 = time.time()
         prev_counters = pipe.counters if pipe else None
-        pipe = DedupPipeline(spark, DedupConfig(**cfg_kw))
+        pipe = DedupPipeline(spark, DedupConfig())
         out = pipe.run(t)
         out["clusters"].count()
         walls.append(round(time.time() - t0, 2))
@@ -220,7 +215,6 @@ def main() -> None:
                 "cold_walls": walls[:-1],
                 "cold_stages": stage_logs[:-1],
                 "counters": pipe.counters,
-                "policy": pipe.policy or ({"minhash_prefilter_forced": pf} if pf else {}),
                 **rec,
             }
         )

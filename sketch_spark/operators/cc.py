@@ -1,18 +1,24 @@
-"""Connected components via alternating large-star/small-star DataFrame joins.
+"""Connected components via alternating large-star/small-star DataFrame passes.
 
 The reference stops at candidate ids + match counts (ssi.h); clustering is
 the thin layer the north rule adds.  We use the Kiveris et al. (2014)
 "Connected Components in MapReduce" alternating algorithm, which converges in
-O(log n) rounds even on giant near-clique components, expressed purely as
-groupBy + join (no GraphX/RDD, per north rule).
+O(log n) rounds even on giant near-clique components, expressed purely in
+DataFrame operations (no GraphX/RDD, per north rule).
 
-Each round is two phases; both avoid collect_list on neighborhoods (a
-boilerplate component's min-node can have degree ~ component size, which
-would OOM a collected list):
+Each round is two phases.  Each attaches m(u) to every edge row with a
+window min over partitionBy(u) (one exchange; a groupBy-min + join-back
+shuffles the edges twice), then takes a distinct.  Neither collects a neighborhood into a list (a boilerplate component's min-node
+can have degree ~ component size, which would OOM a collected list):
 
   large-star: m(u) = min over N(u) ∪ {u};  emit (v, m(u)) for v in N(u), v > u
   small-star: over edges oriented low<-high: m(u) = min(N<(u) ∪ {u});
               emit (v, m(u)) for v in N<(u) ∪ {u}
+
+Trade-off of the window form: all rows of one u land in one window
+partition, with no map-side partial aggregate and no AQE skew split, so a
+very-high-degree node is a single-task straggler (the groupBy + join-back
+form has both).
 
 Convergence = edge multiset stable (checked with an order-insensitive
 count+hash signature).  Lineage is cut every iteration with localCheckpoint

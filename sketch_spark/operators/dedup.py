@@ -8,16 +8,20 @@ Stages (each checkpointable, each with counters):
              + optimal densification (pandas UDF over 1 row/conv)
   exact      full-text-hash groups -> star edges (catches 0-shingle convs)
   cands      LSH bands (rpr registers/band) -> capped buckets -> pairs
-  verify     MinHash pre-filter (j_est >= tau_pre) then EXACT shingle-set
-             Jaccard via array_intersect (conversations are bounded, so the
-             exact set fits the row) -> pairs with j >= tau
+  verify     EXACT shingle-set Jaccard of every candidate pair via
+             array_intersect (conversations are bounded, so the exact set
+             fits the row) -> pairs with j >= tau
   substr     winnowing fingerprints -> long-shared-substring pairs
   cc         alternating large/small-star connected components
   clusters   every conv labeled; non-dup convs are their own cluster
 
 Scale: candidate generation is the only superlinear risk; it is bounded by
-the deterministic bucket cap + AQE skew handling.  The MinHash pre-filter
-keeps the exact verification join linear in true-ish pairs.
+the deterministic bucket cap + AQE skew handling, which keeps the exact
+verification join linear in candidate pairs.
+
+DedupPipeline.run(t) takes a transcripts table; run_conv(conv) takes any
+table in conv_table's row format, so document_clusters runs the same chain
+over flat documents (transcripts.doc_table).
 """
 
 from __future__ import annotations
@@ -26,7 +30,7 @@ import hashlib
 import json
 from dataclasses import asdict, dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sketch_spark.operators import cc as cc_mod
@@ -41,33 +45,9 @@ class DedupConfig:
     p: int = 7  # 2^p = 128 registers
     rpr: int = 2  # registers per band -> m/rpr bands
     bucket_cap: int = 64
-    tau_pre: float = 0.2  # MinHash candidate pre-filter threshold
-    use_minhash_prefilter: bool | None = None  # None = auto (see below)
-    # Exact verify is cheaper on bounded convs (array_intersect is a native
-    # expression; zip_with over 128 registers is an interpreted HOF); the
-    # pre-filter pays only when the exact shingle arrays become the
-    # dominant verify byte stream (VERDICT r3 #4).  Auto policy: enable
-    # when median-shingle-set-size x candidate-count exceeds
-    # prefilter_threshold — both numbers are free (one approx-percentile
-    # agg on the persisted conv table; cands row count from the stage log).
-    # NOTE the pre-filter is a bytes-vs-recall trade, not free: a true
-    # tau=0.5 pair whose 128-register estimate falls below tau_pre=0.2
-    # (~6.8 sigma of register noise, plus empty-bin densification noise on
-    # very small shingle sets) is dropped before the exact verify, so the
-    # SAME corpus can cluster differently above vs below the threshold.
-    # The decision is recorded in DedupPipeline.policy (emitted into the
-    # scaling jsonl) so every artifact attributes which path produced it;
-    # pass use_minhash_prefilter=False to pin exact-only behavior, and see
-    # BENCH/BASELINE.md section 7b for the measured crossover + recall.
-    prefilter_threshold: float = 1.0e9  # measured both ways: BENCH/BASELINE.md §7b
     tau: float = 0.5  # exact-Jaccard acceptance threshold
     substring_L: int = 200
     substring_k: int = 50
-    enable_substring: bool = True
-    # optional secondary SimHash Hamming verification (north-rule surface;
-    # redundant when exact verification is on, so default off)
-    use_simhash_verify: bool = False
-    simhash_max_hamming: int = 16
     # >0 enables per-partition resume for the conv stage (north rule:
     # per-partition lineage): conv rows are hash-assigned to
     # resume_partitions buckets by pmod(xxhash64(conv_id), P) and each
@@ -91,67 +71,25 @@ def document_clusters(
     text_col: str = "text",
     cfg: DedupConfig | None = None,
 ) -> DataFrame:
-    """Near-dup clustering of a flat document table (word-level 3-gram
-    shingles instead of turn-level): the full exact + MinHash/LSH/verify +
-    winnowing-substring + CC chain, ANSI-safe (usable under a driver-owned
-    session).  Returns (doc_id, cluster_id, canonical_doc_id,
-    cluster_size)."""
-    from sketch_spark.functions import text as T
-
-    cfg = cfg or DedupConfig()
-    ids = F.col(id_col).cast("string")
-    conv = docs.select(
-        ids.alias("conv_id"),
-        F.col(text_col).alias("full_text"),
-        F.xxhash64(F.col(text_col), F.lit(cfg.seed)).alias("full_hash"),
-        F.xxhash64(F.col(text_col), F.lit(cfg.seed + 1)).alias("full_hash2"),
-        F.array_sort(
-            F.array_distinct(T.shingle_hashes_col(F.col(text_col), cfg.shingle_n, cfg.seed))
-        ).alias("shingles"),
-    ).persist()
-    conv.count()
-    sig = minhash.one_perm_signature_from_array(
-        conv.select("conv_id", "shingles"), "shingles", "sig", cfg.p
-    ).select("conv_id", "sig")
-    sig = minhash.densify_signatures(sig, "sig", cfg.p).persist()
-    sig.count()
-    exact = transcripts.exact_dup_pairs(conv)
-    bands = lsh.band_keys(sig, "sig", "conv_id", cfg.rpr, 1 << cfg.p)
-    cands = lsh.candidate_pairs(bands, "conv_id", cfg.bucket_cap)
-    pre = lsh.verify_pairs(cands, sig, "conv_id", "sig", b_bits=64 - cfg.p, tau=cfg.tau_pre)
-    sa = conv.select(F.col("conv_id").alias("a"), F.col("shingles").alias("_sha"))
-    sb = conv.select(F.col("conv_id").alias("b"), F.col("shingles").alias("_shb"))
-    inter = F.size(F.array_intersect("_sha", "_shb")).cast("double")
-    union = F.size(F.array_union("_sha", "_shb")).cast("double")
-    j = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    verified = (
-        pre.join(sa, "a").join(sb, "b").withColumn("j_exact", j)
-        .where(F.col("j_exact") >= cfg.tau)
-        .select("a", "b")
+    """Near-dup clustering of a flat document table: DedupPipeline over
+    transcripts.doc_table (word-level n-gram shingles instead of
+    turn-level), ANSI-safe (usable when spark.sql.ansi.enabled is on).  Returns
+    (doc_id, cluster_id, canonical_doc_id, cluster_size); a cluster's id
+    is the doc id of its minimum-cid member."""
+    pipe = DedupPipeline(docs.sparkSession, cfg)
+    conv = pipe.ckpt.run(
+        "conv",
+        lambda: transcripts.doc_table(
+            docs, id_col, text_col, pipe.cfg.shingle_n, pipe.cfg.seed
+        ),
     )
-    edges = exact.select("a", "b").union(verified)
-    if cfg.enable_substring:
-        substr = suffix.substring_pairs(
-            conv, "full_text", "conv_id", cfg.substring_L, cfg.substring_k
-        )
-        edges = edges.union(substr.select("a", "b"))
-    labels, _ = cc_mod.connected_components(edges)
-    clusters = (
-        conv.select("conv_id")
-        .join(labels.withColumnRenamed("node", "conv_id"), "conv_id", "left")
-        .select(
-            F.col("conv_id").alias(id_col),
-            F.coalesce("cluster_id", F.col("conv_id")).alias("cluster_id"),
-        )
-    )
-    from pyspark.sql import Window
-
-    wc = Window.partitionBy("cluster_id")
+    clusters = pipe.run_conv(conv)["clusters"]
     return clusters.select(
-        id_col,
+        F.col("conv_id").alias(id_col),
         "cluster_id",
-        F.col("cluster_id").alias("canonical_doc_id"),
-        F.count(F.lit(1)).over(wc).cast("long").alias("cluster_size"),
+        F.col("canonical_conv_id").alias("canonical_doc_id"),
+        F.count(F.lit(1)).over(Window.partitionBy("cluster_id"))
+        .cast("long").alias("cluster_size"),
     )
 
 
@@ -165,7 +103,6 @@ class DedupPipeline:
         self.spark = spark
         self.cfg = cfg or DedupConfig()
         self.counters: dict[str, int] = {}
-        self.policy: dict = {}  # auto-decisions taken this run (lineage)
         self.ckpt = CheckpointManager(
             spark,
             checkpoint_dir or "",
@@ -238,48 +175,14 @@ class DedupPipeline:
 
         return self.ckpt.run("cands", build)
 
-    def _median_shingles(self, conv: DataFrame) -> int:
-        """Policy input for the auto prefilter decision — one tiny agg over
-        the persisted conv table.  Split out so run() can overlap it with
-        the sig -> cands chain (it depends only on conv), removing one
-        blocking driver job (~0.2 s of pure latency) from the verify
-        stage's critical path."""
-        return int(
-            conv.agg(
-                F.expr("approx_percentile(size(shingles), 0.5)")
-            ).collect()[0][0]
-            or 0
-        )
-
     def verify_stage(
-        self,
-        cands: DataFrame,
-        sig: DataFrame,
-        conv: DataFrame,
-        med_shingles: int | None = None,
+        self, cands: DataFrame, sig: DataFrame, conv: DataFrame
     ) -> DataFrame:
+        """Exact Jaccard of every candidate pair.  `sig` is unused; it stays
+        in the signature for callers that pass the stage outputs in order."""
         cfg = self.cfg
 
         def build():
-            pre = cands
-            use_pref = cfg.use_minhash_prefilter
-            if use_pref is None:
-                med = (
-                    med_shingles
-                    if med_shingles is not None
-                    else self._median_shingles(conv)
-                )
-                cn = self.ckpt.rows_of("cands") or 0
-                use_pref = float(med) * float(cn) > cfg.prefilter_threshold
-                self.policy = {
-                    "median_shingles": int(med),
-                    "candidate_pairs": int(cn),
-                    "minhash_prefilter": bool(use_pref),
-                }
-            if use_pref:
-                pre = lsh.verify_pairs(
-                    cands, sig, "cid", "sig", b_bits=64 - cfg.p, tau=cfg.tau_pre
-                )
             sa = conv.select(
                 F.col("cid").alias("a"), F.col("shingles").alias("_sha")
             )
@@ -290,7 +193,7 @@ class DedupPipeline:
             union = F.size(F.array_union("_sha", "_shb")).cast("double")
             j = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
             return (
-                pre.join(sa, "a")
+                cands.join(sa, "a")
                 .join(sb, "b")
                 .withColumn("j_exact", j)
                 .where(F.col("j_exact") >= cfg.tau)
@@ -341,8 +244,12 @@ class DedupPipeline:
         # a re-run on the same pipeline object must not stack a second set
         # of pinned stage blocks on top of the first
         self.ckpt.unpersist_all()
-        conv = self.conv_stage(t)
+        return self.run_conv(self.conv_stage(t))
 
+    def run_conv(self, conv: DataFrame) -> dict[str, DataFrame]:
+        """Every stage after conv, over a materialized table in
+        conv_table's row format (conv_id, cid, full_text, full_hash,
+        full_hash2, shingles)."""
         # Overlap independent stage chains (optimization guide §2.6):
         # substr and exact depend ONLY on conv, while sig -> cands ->
         # verify is a chain — running them sequentially left most of the
@@ -356,14 +263,9 @@ class DedupPipeline:
         # on local[32].
         from concurrent.futures import ThreadPoolExecutor
 
-        fut_substr = fut_exact = fut_med = None
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            if self.cfg.enable_substring:
-                fut_substr = pool.submit(self.substr_stage, conv)
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            fut_substr = pool.submit(self.substr_stage, conv)
             fut_exact = pool.submit(self.exact_stage, conv)
-            if self.cfg.use_minhash_prefilter is None:
-                # policy input depends only on conv — overlap it too
-                fut_med = pool.submit(self._median_shingles, conv)
             # the counters stage's conv census (row count + cid injectivity)
             # also depends only on conv; precompute it here instead of as a
             # blocking driver job after cc (same latency-hiding rationale)
@@ -375,23 +277,15 @@ class DedupPipeline:
             )
             sig = self.sig_stage(conv)
             cands = self.cands_stage(sig)
-            if self.cfg.use_simhash_verify:
-                from sketch_spark.operators import simhash as sh_mod
-
-                sims = sh_mod.simhash_signatures_np(conv, "shingles", "cid")
-                cands = sh_mod.hamming_filter(
-                    cands, sims, id_col="cid", max_hamming=self.cfg.simhash_max_hamming
-                ).select("a", "b", "n_bands")
-            verified = self.verify_stage(
-                cands, sig, conv,
-                med_shingles=fut_med.result() if fut_med is not None else None,
-            )
+            verified = self.verify_stage(cands, sig, conv)
             exact = fut_exact.result()
-            substr = fut_substr.result() if fut_substr is not None else None
+            substr = fut_substr.result()
 
-        edges = exact.select("a", "b").union(verified.select("a", "b"))
-        if substr is not None:
-            edges = edges.union(substr.select("a", "b"))
+        edges = (
+            exact.select("a", "b")
+            .union(verified.select("a", "b"))
+            .union(substr.select("a", "b"))
+        )
 
         # CC runs in cid (long) space; translate labels back to conv_id
         # strings only at the very end — two n-row hash joins against the
@@ -428,11 +322,13 @@ class DedupPipeline:
             # the counters stage previously ran a separate
             # distinct().count() job over the just-cached table — same
             # number, one less blocking driver job (pure latency)
+            # -- count_distinct skips NULL, which distinct() counts as one
+            # value: a NULL conv_id labels its cluster NULL, so add it back
             crow = canonical.agg(
-                F.count(F.lit(1)).alias("n"),
                 F.count_distinct("cluster_id").alias("k"),
+                F.max(F.col("cluster_id").isNull().cast("int")).alias("k_null"),
             ).collect()[0]
-            return canonical, iters, int(crow.k)
+            return canonical, iters, int(crow.k) + int(crow.k_null or 0)
 
         canonical, iters, n_clusters = self.ckpt.timed("cc", run_cc)
         # surface the CC stage in the manifest directory next to the
@@ -459,20 +355,12 @@ class DedupPipeline:
                 n = self.ckpt.rows_of(stage)
                 return int(n) if n is not None else df.count()
 
-            # under use_simhash_verify the local `cands` is the
-            # hamming-filtered set, NOT the "cands" stage output — count it
             return {
                 "convs": int(cr.n),
                 "exact_pairs": rows("exact", exact),
-                "candidate_pairs": (
-                    cands.count()
-                    if self.cfg.use_simhash_verify
-                    else rows("cands", cands)
-                ),
+                "candidate_pairs": rows("cands", cands),
                 "verified_pairs": rows("verify", verified),
-                "substring_pairs": (
-                    rows("substr", substr) if substr is not None else 0
-                ),
+                "substring_pairs": rows("substr", substr),
                 "cc_iterations": iters,
                 "clusters": n_clusters,
             }

@@ -15,12 +15,17 @@ sliding-window semantics: L turns -> max(L-n+1, 0) shingles).
 
 Everything is ONE groupBy(conv_id): sort-by-struct + higher-order functions;
 no Python, no window function, no second scan.
+
+doc_table emits the same row format for flat document tables (one text per
+id, word-level shingles), so the dedup chain reads either.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from sketch_spark.functions.text import shingle_hashes_col
 
 SEP = "\x1e"
 DEFAULT_N = 3
@@ -71,6 +76,28 @@ def conv_table(transcripts: DataFrame, n: int = DEFAULT_N, seed: int = DEFAULT_S
         F.xxhash64(full_text, F.lit(seed + 1)).alias("full_hash2"),
         shingles.alias("shingles"),
         F.size(shingles).alias("n_shingles"),
+    )
+
+
+def doc_table(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = DEFAULT_N,
+    seed: int = DEFAULT_SEED,
+) -> DataFrame:
+    """One row per document, in the conv_table columns the dedup chain
+    reads: conv_id (the id as a string), cid, full_text, full_hash,
+    full_hash2, shingles (sorted DISTINCT word n-gram hashes)."""
+    conv_id = F.col(id_col).cast("string")
+    text = F.col(text_col)
+    return docs.select(
+        conv_id.alias("conv_id"),
+        F.xxhash64(conv_id).alias("cid"),
+        text.alias("full_text"),
+        F.xxhash64(text, F.lit(seed)).alias("full_hash"),
+        F.xxhash64(text, F.lit(seed + 1)).alias("full_hash2"),
+        F.array_sort(F.array_distinct(shingle_hashes_col(text, n, seed))).alias("shingles"),
     )
 
 

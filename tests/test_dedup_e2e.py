@@ -160,3 +160,30 @@ def test_kill_mid_stage_partition_resume(spark, corpus, tmp_path):
     assert [e for e in p3.ckpt.log if e["stage"] == "conv"][0].get("resumed")
     shutil.rmtree(ck, ignore_errors=True)
     shutil.rmtree(ck0, ignore_errors=True)
+
+
+def test_clusters_counter_counts_null_conv_id(spark):
+    """A NULL conv_id conversation gets a NULL cluster_id; the clusters
+    counter must count it like distinct() does."""
+    import datetime
+
+    ts = datetime.datetime(2024, 1, 1)
+    convs = {
+        "dup-a": ["same opening line", "same reply text", "same closing"],
+        "dup-b": ["same opening line", "same reply text", "same closing"],
+        "single": ["an unrelated question", "its own answer"],
+        None: ["the conversation without an id", "still gets clustered"],
+    }
+    rows = [
+        (cid, i, "user" if i % 2 == 0 else "assistant", text, None, ts)
+        for cid, texts in convs.items()
+        for i, text in enumerate(texts)
+    ]
+    t = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+    pipe = DedupPipeline(spark, DedupConfig())
+    clusters = pipe.run(t)["clusters"]
+    assert clusters.where(F.col("cluster_id").isNull()).count() == 1
+    assert pipe.counters["clusters"] == clusters.select("cluster_id").distinct().count() == 3
+    pipe.unpersist_all()

@@ -23,8 +23,18 @@ def duck():
 
 def test_entry_smoke(spark):
     df = E.entry(spark)
-    assert df.count() > 0
-    assert set(df.columns) >= {"doc_id", "cluster_id"}
+    rows = df.collect()
+    assert len(rows) > 0
+    assert set(df.columns) >= {"doc_id", "cluster_id", "canonical_doc_id", "cluster_size"}
+    docs = [r.doc_id for r in rows]
+    assert len(docs) == len(set(docs))
+    members: dict = {}
+    for r in rows:
+        members.setdefault(r.cluster_id, []).append(r.doc_id)
+    canon = {r.doc_id: r.canonical_doc_id for r in rows}
+    for r in rows:
+        assert r.cluster_size == len(members[r.cluster_id]), r
+        assert canon[r.canonical_doc_id] == r.canonical_doc_id, r
 
 
 def test_poly_docs_matches_column_folds(spark):
@@ -77,7 +87,7 @@ def test_q41_stage_dir_from_shared_root(spark, tmp_path, monkeypatch):
 
 def test_queries_are_ansi_safe(spark):
     """The driver owns its session and Spark 4 defaults ANSI on; every
-    queries() plan must be overflow-free under strict arithmetic (mod-prime
+    queries() plan and entry() must be overflow-free under strict arithmetic (mod-prime
     folds, bit ops, bounded products only).  The memo is cleared so plans
     re-build under the strict conf."""
     from sketch_spark.plans import entry_queries as EQ
@@ -89,6 +99,7 @@ def test_queries_are_ansi_safe(spark):
     try:
         for name, fn in E.queries().items():
             assert fn(spark, SF).count() >= 0, name
+        assert E.entry(spark).count() > 0
     finally:
         spark.conf.set("spark.sql.ansi.enabled", "false")
         for df in EQ._MEMO.values():
